@@ -1,16 +1,19 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, If, IsNull, Literal, ScalarSubquery, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.{Column, Encoder, Encoders, functions}
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftShims, functions}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** T33/E2 (SURVEY §2.4, §2.11): Bloom-filter aggregate over a string
   * column — the membership sketch that completes the one-pass sketch
   * family (A4 HyperLogLog for cardinality, T28 count-min for frequency,
-  * this for membership). Spark ships `BloomFilterAggregate` but keeps it
-  * internal (runtime join filters only, not SQL-callable), so this is
-  * the public-API typed-Aggregator form over the same
-  * `org.apache.spark.util.sketch.BloomFilter`.
+  * this for membership), keyed by the item STRING (`putString`). The
+  * manifest's on-disk bloom sidecars are written with it, so its bytes
+  * are a storage format; in-query membership uses Spark's native pair
+  * instead (`BloomFilterAgg.build` / `mightContain` below).
   *
   * Buffer: the filter's bit array — merge is bitwise OR, so the
   * aggregation is associative, commutative AND order/partitioning
@@ -43,39 +46,29 @@ object BloomFilterAgg {
   def apply(item: Column, expectedItems: Long, fpp: Double): Column =
     functions.udaf(new BloomFilterAgg(expectedItems, fpp)).apply(item)
 
-  /** Membership probe against serialized filter bytes: no false
-    * negatives; false positives at ≤ the construction fpp. The probe
-    * runs once per ROW and the join re-materializes the byte array per
-    * row (so reference identity never repeats); deserialization is
-    * memoized per JVM keyed by the FULL serialized content
-    * (ByteBuffer.wrap gives content equals/hashCode) — the map only
-    * ever holds the handful of distinct filters a JVM sees, so the
-    * full-content key costs one array scan per row while ruling out
-    * any sampled-key collision between same-sized filters. */
-  // BOUNDED (r20 review find): a long-lived executor on a cluster
-  // that rebuilds filters (nightly refresh, per-partition filters)
-  // would otherwise accrete every distinct serialized filter forever
-  // — ~1.2 MB each. Access-ordered LRU, plenty for the handful of
-  // live filters any one stage probes.
-  private val MaxParsed = 64
-  private val parsed = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[java.nio.ByteBuffer, BloomFilter](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[java.nio.ByteBuffer, BloomFilter])
-          : Boolean = size() > MaxParsed
-    })
-  private def parse(bytes: Array[Byte]): BloomFilter =
-    parsed.computeIfAbsent(java.nio.ByteBuffer.wrap(bytes), k =>
-      BloomFilter.readFrom(new java.io.ByteArrayInputStream(k.array())))
-  val mightContain: (Column, Column) => Column = {
-    // Spark only auto-null-guards PRIMITIVE-typed UDF inputs — a null
-    // byte array or probe string reaches the lambda (nullable probe
-    // columns, outer-join filter sides) and used to NPE the task; the
-    // SQL-consistent answer is null (r20 review find)
-    val f = functions.udf((bytes: Array[Byte], s: String) =>
-      if (bytes == null || s == null) null.asInstanceOf[java.lang.Boolean]
-      else java.lang.Boolean.valueOf(parse(bytes).mightContainString(s)))
-    (bf: Column, s: Column) => f(bf, s)
+  // a null item stays null (xxhash64 would hash it to its seed), so the
+  // build skips it, like `reduce` above, and a null probe answers null
+  private def hashed(item: Column): Expression = {
+    val e = GraftShims.expression(item)
+    If(IsNull(e), Literal(null, LongType), new XxHash64(Seq(e)))
   }
+
+  /** In-query filter over `items`' column `item`: Spark's
+    * `BloomFilterAggregate` over `xxhash64(item)` (NULL over an empty
+    * input) as an uncorrelated scalar subquery, run once when the plan
+    * runs, not when it is built. Probe it with `mightContain` only: it
+    * holds item hashes, not the item strings the sidecars hold. */
+  def build(items: DataFrame, item: String, expectedItems: Long, fpp: Double): Column = {
+    val agg = new BloomFilterAggregate(hashed(functions.col(item)), Literal(expectedItems),
+      Literal(BloomFilter.optimalNumOfBits(expectedItems, fpp))).toAggregateExpression()
+    GraftShims.column(ScalarSubquery(
+      items.agg(GraftShims.column(agg)).queryExecution.analyzed))
+  }
+
+  /** Probe against a filter from `build` (or its bytes as a literal):
+    * Spark's codegen'd `BloomFilterMightContain`, which deserializes the
+    * filter once per task. No false negatives; false positives at ≤ the
+    * construction fpp. A null filter or probe answers null. */
+  def mightContain(bf: Column, item: Column): Column =
+    GraftShims.column(BloomFilterMightContain(GraftShims.expression(bf), hashed(item)))
 }

@@ -1493,9 +1493,10 @@ object TextVector {
     * which exploded the corpus ×k and paid a Sort+SortAggregate
     * exchange per assignment pass (3 passes in the t31 plan). Encoding
     * is a pure projection: at the 100 TB design point PQ encode must
-    * run at scan speed, which this does. A codeword of mismatched
-    * width contributed null d2 under min_by and is likewise never
-    * chosen. Equivalence is spec-pinned in TextVectorSpec. */
+    * run at scan speed, which this does. Equivalent for equal widths
+    * (all 16 lanes): a width-mismatched codeword is skipped here, but
+    * would have won under min_by (its NULL d2 sorts first). Equivalence
+    * is spec-pinned in TextVectorSpec. */
   private[graft] def pqEncode(subs: DataFrame,
                               cbRows: Seq[(Int, Int, Seq[Double])]): DataFrame = {
     val byJ: Map[Int, (Array[Int], Array[Array[Double]])] =
@@ -1624,29 +1625,27 @@ object TextVector {
     * membership SKETCH instead of the exact broadcast join. At 100 TB the
     * exact path ships the full benchmark shingle SET to every executor;
     * the Bloom filter is a constant-size bitmap (fpp-controlled) built in
-    * ONE aggregation pass and broadcast as a single row — the classic
-    * sketch trade, completing the family: A4 HyperLogLog (cardinality),
-    * T28 count-min (frequency), T33 Bloom (membership). The exact join
-    * stays in-plan here as the verification harness for the sketch's
-    * contract: per training doc, every exactly-contaminated shingle MUST
-    * bloom-hit (no false negatives — `bloom_consistent` folds the
-    * guarantee into an oracle-checkable boolean, the a4/t28 pattern),
-    * while false positives only ever ADD candidate hits (`n_bloom_hits ≥
-    * n_exact_hits`), which a production pipeline re-verifies exactly on
-    * the tiny flagged subset. */
+    * ONE aggregation pass inside a scalar subquery and probed by the
+    * codegen'd `might_contain`, which deserializes it once per task — the
+    * classic sketch trade, completing the family: A4 HyperLogLog
+    * (cardinality), T28 count-min (frequency), T33 Bloom (membership).
+    * The exact join stays in-plan as the verification harness for the
+    * sketch's contract: per training doc, every exactly-contaminated
+    * shingle MUST bloom-hit (no false negatives — `bloom_consistent`
+    * folds the guarantee into an oracle-checkable boolean, the a4/t28
+    * pattern; an empty bench side's NULL filter hits nothing exactly),
+    * while false positives only ever ADD candidate hits. */
   def t33_bloom_decontaminate(s: SparkSession, d: String): DataFrame = {
+    import graft.functions.BloomFilterAgg
     val base = shingledNearDups(s, d)
     val bench = base.filter(col("doc_id") <= 20)
       .select(explode(col("sh")).as("shingle"))
-    val bf = bench.agg(
-      graft.functions.BloomFilterAgg(col("shingle"), 100000L, 0.01).as("bf"))
+    val bf = BloomFilterAgg.build(bench, "shingle", 100000L, 0.01)
     val benchSet = bench.distinct().withColumn("exact_hit", lit(true))
     val train = base.filter(col("doc_id") > 20)
       .select(col("doc_id").as("train_id"), explode(col("sh")).as("shingle"))
-    train.crossJoin(broadcast(bf))
-      .join(broadcast(benchSet), Seq("shingle"), "left")
-      .withColumn("bloom_hit",
-        graft.functions.BloomFilterAgg.mightContain(col("bf"), col("shingle")))
+    train.join(broadcast(benchSet), Seq("shingle"), "left")
+      .withColumn("bloom_hit", BloomFilterAgg.mightContain(bf, col("shingle")))
       .groupBy("train_id")
       .agg(
         count(lit(1)).as("n_shingles"),

@@ -132,9 +132,12 @@ class ExtractionSpec extends SparkTestBase {
     // extraction goldens are unaffected; before this channel existed
     // those 8 streams were skipped with no trace — the exact silent
     // thinning the audit exists to surface.)
-    val fs = new java.io.File("/root/reference/data").listFiles()
-      .filter(_.getName.endsWith(".pdf"))
-    assert(fs.nonEmpty)
+    val dir = new java.io.File("/root/reference/data")
+    val listed = dir.listFiles()
+    assert(listed != null,
+      s"PDF corpus directory ${dir.getPath} is missing or unreadable")
+    val fs = listed.filter(_.getName.endsWith(".pdf"))
+    assert(fs.nonEmpty, s"no .pdf files in ${dir.getPath}")
     fs.foreach { f =>
       val audit = PdfText.filterAudit(java.nio.file.Files.readAllBytes(f.toPath))
       assert(audit == Map("DCTDecode" -> 5, "none" -> 3),

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 /** Scale-design mechanics the sf0.01 differential can't see: bucketed
   * co-located joins (zero-exchange), skew salting equivalence, and the
   * typed nested-report assembly (SURVEY §1.2). */
-class ScaleDesignSpec extends SparkTestBase {
+class ScaleDesignSpec extends SparkTestBase
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("bucketed tables join without a shuffle exchange") {
@@ -350,6 +351,57 @@ class ScaleDesignSpec extends SparkTestBase {
     // the N side arrives as a broadcast cross join of a 1-row aggregate;
     // a driver-side count() would leave no join and run a separate job
     assert(plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
+  }
+
+  test("t33 probes its bloom filter with might_contain over a subquery: no cross join, no UDF, no eager job") {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, ScalaUDF}
+    import org.apache.spark.sql.execution.{ExecSubqueryExpression, ProjectExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    val sc = spark.sparkContext
+    // the first build memoizes the shingled corpus (and infers the
+    // parquet schema, a job every corpus read pays); the build under
+    // test starts from that warm memo, as the board's timed ops do
+    ops.TextVector.t33_bloom_decontaminate(spark, sf)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("")): Unit
+    }
+    sc.addSparkListener(listener)
+    val df = try {
+      val built = ops.TextVector.t33_bloom_decontaminate(spark, sf)
+      // listener events arrive in order: once the sentinel job's start
+      // is seen, every job the build started has been seen before it
+      sc.setJobGroup("t33-sentinel", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!groups.contains("t33-sentinel") &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(groups.contains("t33-sentinel"), "listener never drained")
+      built
+    } finally sc.removeSparkListener(listener)
+    val buildJobs = groups.toArray.takeWhile(_ != "t33-sentinel").length
+    assert(buildJobs == 0, s"building t33 ran $buildJobs Spark job(s)")
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val nodes = collectWithSubqueries(plan) { case p => p }
+    val probeProjects = nodes.collect { case p: ProjectExec
+      if p.projectList.exists(_.exists(_.isInstanceOf[BloomFilterMightContain])) => p }
+    val probes = probeProjects.flatMap(
+      _.projectList.flatMap(_.collect { case m: BloomFilterMightContain => m }))
+    assert(probes.nonEmpty, s"no might_contain probe:\n$plan")
+    probes.foreach(m => assert(
+      m.bloomFilterExpression.isInstanceOf[ExecSubqueryExpression],
+      s"might_contain is not fed by a subquery: $m"))
+    assert(nodes.forall {
+      case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => false
+      case _ => true
+    }, s"the filter still reaches the rows through a join:\n$plan")
+    val udfs = probeProjects.flatMap(_.projectList.flatMap(_.collect { case u: ScalaUDF => u }))
+    assert(udfs.isEmpty, s"per-row Scala UDFs on the probe: $udfs")
   }
 
   test("t4 pair stage is shared: second t4 query reuses the persisted cache") {

@@ -541,6 +541,25 @@ class TextVectorSpec extends SparkTestBase {
       assert(hitsById.getOrElse(id, 0L) >= 5L, s"t18-flagged $id under 5 hits in t33") }
   }
 
+  test("bloom decontamination: an empty bench side (NULL filter) keeps every row consistent") {
+    // no doc_id <= 20, so the bench side is empty and Spark's
+    // BloomFilterAggregate yields a NULL filter; the probe then answers
+    // null, which must not read as a false negative
+    val dir = java.nio.file.Files.createTempDirectory("graft_t33_empty_").toString
+    spark.createDataFrame(Seq(
+      (100L, "alpha beta gamma delta epsilon", "en", "src_1", 30L),
+      (101L, "zeta eta theta iota kappa lambda", "en", "src_2", 32L)))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val rows = ops.TextVector.t33_bloom_decontaminate(spark, dir)
+      .select($"train_id", $"n_exact_hits", $"bloom_consistent").collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      assert(r.getLong(1) == 0L, s"exact hits against an empty bench: $r")
+      assert(!r.isNullAt(2) && r.getBoolean(2), s"inconsistent row: $r")
+    }
+  }
+
   test("near-dup clusters: a corpus with zero candidate pairs yields an empty summary, not an NPE") {
     // every doc is under the 3-token shingling floor, so the planted
     // near-dup machinery produces no shingles and hence no pairs

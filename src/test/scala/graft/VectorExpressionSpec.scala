@@ -147,15 +147,13 @@ class VectorExpressionSpec extends SparkTestBase {
   test("mightContain is null-safe: null filter or probe answers null, never an NPE (r20 review find)") {
     val s = spark; import s.implicits._
     import org.apache.spark.sql.functions.{col, lit}
-    val bf = Seq("a", "b", "c").toDF("x")
-      .agg(graft.functions.BloomFilterAgg(col("x"), 100L, 0.01).as("bf"))
-      .head.getAs[Array[Byte]](0)
+    val bf = graft.functions.BloomFilterAgg.build(
+      Seq("a", "b", "c").toDF("x"), "x", 100L, 0.01)
     // nullable probe column (outer-join shape): null probes → null,
-    // present probes answer — Spark only auto-guards PRIMITIVE inputs,
-    // so the raw lambda used to NPE the whole task
+    // present probes answer
     val probed = Seq(Some("a"), None, Some("zz")).toDF("p")
       .withColumn("hit",
-        graft.functions.BloomFilterAgg.mightContain(lit(bf), col("p")))
+        graft.functions.BloomFilterAgg.mightContain(bf, col("p")))
       .collect().map(r => (r.getAs[String]("p"),
         if (r.isNullAt(1)) null else java.lang.Boolean.valueOf(r.getBoolean(1))))
     assert(probed.toMap == Map("a" -> java.lang.Boolean.TRUE,
